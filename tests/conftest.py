@@ -3,21 +3,31 @@ from __future__ import annotations
 import base64
 import json
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from evaluate_human_balance_with_spark_streaming_spark.caching import release_managed
 from evaluate_human_balance_with_spark_streaming_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # Temp dirs the engine makes for itself (materialized stream wires)
+    # go under pytest's base temp, which pytest prunes, not /tmp.
+    system_tempdir = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("engine-tmp"))
     spark = get_spark("ehb-tests", shuffle_partitions=8)
     yield spark
+    # Replay checkpoints and memory sinks are released on the next
+    # sweep; run the last one so none outlives the session.
+    release_managed()
+    tempfile.tempdir = system_tempdir
 
 
 @pytest.fixture(scope="session")
